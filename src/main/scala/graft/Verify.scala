@@ -23,7 +23,11 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // class + first frames: getMessage alone is null for an NPE and
+        // does not say where the query failed
+        val frames = e.getStackTrace.take(5).map(f => s"\n    at $f").mkString
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: " +
+          s"${e.getMessage}$frames")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

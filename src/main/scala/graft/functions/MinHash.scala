@@ -365,84 +365,6 @@ case class MinHashAgreement(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** First band index (0-based) on which two signatures' band hashes agree,
-  * or -1 when none does — `bands` equal-width slices, each hashed with the
-  * xxhash64-over-ARRAY chain the banding projection uses
-  * (`xxhash64(slice(mh, b*r+1, r))`: fold from seed 42, null slots
-  * skipped), so "agrees on band b" here is EXACTLY the band join's
-  * `a.bh = b.bh` condition (optimization round 21, guide §2.4).
-  *
-  * Why it exists: a pair whose signatures collide in k bands came out of
-  * the LSH band self-join k times, and the batch path deduplicated those
-  * copies with `dropDuplicates(doc_a, doc_b)` — a full Exchange plus two
-  * HashAggregates over every collision row (MetricsProbe at sf0.1: the
-  * measured majority of ql6 after the scan). All k copies are IDENTICAL
-  * rows, and each carries both full signatures — so each row can decide
-  * locally whether ITS band is the pair's first agreeing band and only
-  * that one survive: same single row per pair, zero shuffle. Equivalence
-  * requires every agreeing band's collision row to actually exist, which
-  * holds exactly on the UNCAPPED path (a capped bucket may have dropped
-  * the first-agreeing band's row) — callers keep the dedup when capping.
-  */
-case class MinHashFirstBand(left: Expression, right: Expression, bands: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "minhash_first_band"
-  // null on length mismatch / non-divisible length — impossible for
-  // signatures from one MinHashSignature call, but a filterable NULL
-  // beats a wrong band index if mixed-parameter frames ever meet
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) if bands >= 1 =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"minhash_first_band expects two ARRAY<BIGINT> signatures and bands >= 1, " +
-        s"got ${left.dataType.sql} and ${right.dataType.sql} with bands=$bands")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    route(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  /** Boxed so codegen can assign null through one path. */
-  def route(x: ArrayData, y: ArrayData): java.lang.Integer = {
-    val n = x.numElements()
-    if (n != y.numElements() || n % bands != 0) return null
-    val r = n / bands
-    var b = 0
-    while (b < bands) {
-      var ha = 42L
-      var hb = 42L
-      var j = b * r
-      val end = j + r
-      while (j < end) {
-        // xxhash64-over-array parity: a null slot leaves the hash unchanged
-        if (!x.isNullAt(j)) ha = XXH64.hashLong(x.getLong(j), ha)
-        if (!y.isNullAt(j)) hb = XXH64.hashLong(y.getLong(j), hb)
-        j += 1
-      }
-      if (ha == hb) return Integer.valueOf(b)
-      b += 1
-    }
-    Integer.valueOf(-1)
-  }
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("fb", this, classOf[MinHashFirstBand].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      java.lang.Integer ${ev.value}Out = $ref.route($a, $b);
-      if (${ev.value}Out == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}Out.intValue(); }
-    """)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Fused LSH banding projection: element b = xxhash64 of the signature's
   * b-th equal-width slice — bit-identical to the HOF form
   * `transform(sequence(0, bands-1), b => xxhash64(slice(sig, b*r+1, r)))`
@@ -455,8 +377,8 @@ case class MinHashFirstBand(left: Expression, right: Expression, bands: Int)
   * is what lets the collision rows downstream decide the pair's first
   * agreeing band with an O(bands) array comparison
   * ([[FirstEqualSlot]]) instead of re-hashing both full signatures per
-  * collision row ([[MinHashFirstBand]] — up to 2×numHashes XXH64 calls
-  * per row, the measured ql53 round-21 regression).
+  * collision row (up to 2×numHashes XXH64 calls per row, the measured
+  * ql53 round-21 regression).
   *
   * Accepts ARRAY<BIGINT> (MinHash signatures; hashLong chain) or
   * ARRAY<INT> (SimHash bit vectors; hashInt chain). The signature length
@@ -527,21 +449,21 @@ case class BandHashes(child: Expression, bands: Int) extends UnaryExpression {
   * does — the O(bands) companion of [[BandHashes]]: with both sides'
   * band-hash arrays carried through the band self-join,
   * `a.band === first_equal_slot(a.bha, b.bha)` keeps exactly one
-  * collision row per pair (the first agreeing band's), replacing both the
-  * `dropDuplicates` Exchange AND [[MinHashFirstBand]]'s per-collision-row
-  * re-hashing of the full signatures.
+  * collision row per pair (the first agreeing band's), replacing the
+  * `dropDuplicates` Exchange over every collision row.
   *
   * Null slots never agree (band hashes from [[BandHashes]] are non-null;
-  * the guard covers SQL-registered misuse). Mismatched lengths fail
-  * LOUDLY — two frames banded with different parameters meeting in one
-  * join is a pipeline bug, and a silently filterable result would drop
-  * pairs (ADVICE r21 #1/#2).
+  * the guard covers SQL-registered misuse). A NULL array or mismatched
+  * lengths fail LOUDLY — a NULL `bha` or two frames banded with
+  * different parameters meeting in one join is a pipeline bug, and a
+  * filterable NULL result would silently drop the pair.
   */
 case class FirstEqualSlot(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "first_equal_slot"
+  override def nullable: Boolean = false
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
@@ -550,10 +472,15 @@ case class FirstEqualSlot(left: Expression, right: Expression)
         s"got ${left.dataType.sql} and ${right.dataType.sql}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    route(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    route(left.eval(input).asInstanceOf[ArrayData],
+      right.eval(input).asInstanceOf[ArrayData])
 
   def route(x: ArrayData, y: ArrayData): Int = {
+    if (x == null || y == null)
+      throw new IllegalArgumentException(
+        "first_equal_slot: NULL band-hash array — every banded row must " +
+          "carry its `bha`")
     val n = x.numElements()
     if (n != y.numElements())
       throw new IllegalArgumentException(
@@ -570,8 +497,16 @@ case class FirstEqualSlot(left: Expression, right: Expression)
   override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
                                    ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
     val ref = ctx.addReferenceObj("fes", this, classOf[FirstEqualSlot].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.route($a, $b);")
+    val (l, r) = (left.genCode(ctx), right.genCode(ctx))
+    ev.copy(code = code"""
+      ${l.code}
+      ${r.code}
+      int ${ev.value} = $ref.route(${l.isNull} ? null : ${l.value},
+        ${r.isNull} ? null : ${r.value});
+    """, isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
@@ -590,10 +525,6 @@ object MinHash {
   /** Column face for the first agreeing slot of two band-hash arrays. */
   def firstEqualSlot(a: Column, b: Column): Column =
     Bridge.column(FirstEqualSlot(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Column face for the first agreeing band index. */
-  def firstBand(a: Column, b: Column, bands: Int): Column =
-    Bridge.column(MinHashFirstBand(Bridge.expression(a), Bridge.expression(b), bands))
 
   /** Column face for the fused agreement count. */
   def agreement(a: Column, b: Column): Column =

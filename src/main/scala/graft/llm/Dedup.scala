@@ -50,7 +50,7 @@ object Dedup {
     val sigs = df.select(col(idCol).as("id"), tokenSetSignature(col(textCol)).as("sig"))
     // shuffle_hash so both sides share ONE Exchange(hashpartitioning(sig))
     // via AQE reuse: the sort+md5 signature chain computes once, not once
-    // per side (see candidatePairsFromBands for the full argument)
+    // per side (see bandPairs for the full argument)
     val a = sigs.hint("shuffle_hash").as("a")
     val b = sigs.hint("shuffle_hash").as("b")
     a.join(b, col("a.sig") === col("b.sig") && col("a.id") < col("b.id"))
@@ -129,67 +129,40 @@ object Dedup {
                            numHashes: Int = 64, bands: Int = 8,
                            minJaccard: Double = 0.0,
                            hashedTokenIds: Boolean = false,
-                           maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val banded = bandedSignatures(df, idCol, textCol, numHashes, bands, hashedTokenIds)
-    // (1) score INSIDE the band join (fused agreement expression — 64
-    //     comparisons per collision), THEN dedup: a pair colliding in k
-    //     bands is scored k≤bands times cheaply, and the pair-dedup
-    //     Exchange carries (doc_a, doc_b, est) at ~24 B/row instead of
-    //     both 64-slot signatures at ~1 KB/row. (An earlier HOF-scored
-    //     form had to dedup FIRST — interpreted scoring of k-fold
-    //     duplicates was a 9M-row, 70x slowdown — at the price of
-    //     shuffling the signatures; the fused expression removes the
-    //     dilemma.) Identical signatures ⇒ identical est per pair, so
-    //     dedup-after-scoring keeps an arbitrary but equal survivor.
-    // (2) default bands=8 → r=8: collision prob j^8 per band keeps the
-    //     S-curve knee near j≈0.75 — candidates stay near-duplicates
-    //     instead of exploding quadratically on small-vocabulary corpora.
-    val scored = candidatePairsFromBands(banded, numHashes, maxBucketSize, bands)
-    // no threshold → no filter: callers that prune est_jaccard then pay
-    // nothing for scoring (an always-true filter would block column pruning)
-    if (minJaccard > 0) scored.filter(col("est_jaccard") >= minJaccard) else scored
-  }
+                           maxBucketSize: Int = Int.MaxValue): DataFrame =
+    minHashLshCandidatesFromIndex(
+      BandIndex.build(df, idCol, textCol, numHashes, bands, hashedTokenIds),
+      numHashes, minJaccard, maxBucketSize, bands)
 
-  /** Candidate pairs over an existing [[BandIndex]] table — the same
-    * band self-join + fused scoring tail as [[minHashLshCandidates]],
-    * entered from persisted `(id, mh, band, bh)` rows instead of text
-    * (so `minHashLshCandidates(docs) ==
-    * minHashLshCandidatesFromIndex(BandIndex.build(docs))` by
-    * construction — they share this code). The incremental-lifecycle
-    * building block: a state that carries its index derives the pair
-    * set without ever re-signing.
+  /** Candidate pairs over an existing [[BandIndex]] table of
+    * `(id, mh, bha, band, bh)` rows; [[minHashLshCandidates]] is exactly
+    * this over `BandIndex.build(docs)`. The incremental-lifecycle
+    * building block: a state that carries its index derives the pair set
+    * without ever re-signing.
+    *
+    * Scoring runs INSIDE the band join (fused agreement expression — 64
+    * comparisons per collision), so the pair-dedup Exchange of the
+    * capped path carries (doc_a, doc_b, est) at ~24 B/row instead of
+    * both 64-slot signatures at ~1 KB/row. Default bands=8 → r=8:
+    * collision prob j^8 per band keeps the S-curve knee near j≈0.75 —
+    * candidates stay near-duplicates instead of exploding quadratically
+    * on small-vocabulary corpora.
     */
   def minHashLshCandidatesFromIndex(index: DataFrame, numHashes: Int = 64,
                                     minJaccard: Double = 0.0,
                                     maxBucketSize: Int = Int.MaxValue,
                                     bands: Int = 8): DataFrame = {
-    val scored = candidatePairsFromBands(index, numHashes, maxBucketSize, bands)
-    if (minJaccard > 0) scored.filter(col("est_jaccard") >= minJaccard) else scored
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    aboveJaccard(bandPairs(index, Some(numHashes), maxBucketSize,
+      "minHashLshCandidates"), minJaccard)
   }
 
-  /** Shared banding projection: `(id, mh, bha, band, bh)` — one row per
-    * (doc, band), `bha` = the signature's band-hash ARRAY (fused
-    * [[graft.functions.BandHashes]] — one loop per doc, round 22),
-    * `(band, bh)` = posexplode(bha). The join key of every LSH candidate
-    * path and the ROW FORMAT of [[BandIndex]]. Carrying `bha` (bands × 8
-    * bytes next to the ~numHashes × 8-byte signature) is what lets the
-    * uncapped pair tail keep one collision row per pair with an O(bands)
-    * array comparison instead of re-hashing both signatures per
-    * collision row — the measured ql53 round-21 regression.
+  /** No threshold → no filter: callers that prune est_jaccard then pay
+    * nothing for scoring (an always-true filter would block column
+    * pruning).
     */
-  private def bandedSignatures(df: DataFrame, idCol: String, textCol: String,
-                               numHashes: Int, bands: Int,
-                               hashedTokenIds: Boolean = false): DataFrame = {
-    // hashedTokenIds: minhash md5-derived 8-byte ids instead of the raw
-    // strings — identical banding/scoring semantics on an
-    // oracle-expressible hash basis (see [[tokenIds64]])
-    val toks =
-      if (hashedTokenIds) tokenIds64(tokens(col(textCol)))
-      else tokens(col(textCol))
-    bandedFromTokens(df.select(col(idCol).as("id"), toks.as("toks")),
-      numHashes, bands)
-  }
+  private def aboveJaccard(scored: DataFrame, minJaccard: Double): DataFrame =
+    if (minJaccard > 0) scored.filter(col("est_jaccard") >= minJaccard) else scored
 
   /** Banding tail over an already-projected `(id, toks)` frame: callers
     * that hold the token basis (e.g. shingle ids) band it directly
@@ -214,10 +187,6 @@ object Dedup {
       b => xxhash64(slice(sig, b * lit(r) + 1, lit(r))))
   }
 
-  /** Candidate-pair join over a banded-signature table: band-key
-    * collisions scored inside the join (see [[minHashLshCandidates]] for
-    * the why), deduped to one `(doc_a, doc_b, est_jaccard)` row per pair.
-    */
   /** Arrival-rank df-cut of saturated (band, bh) SIGNATURE buckets — the
     * [[graft.sources.Multimodal]] perceptual `maxBucketSize` convention
     * on the text axis, and the batch twin of the streaming
@@ -251,67 +220,80 @@ object Dedup {
         maxBucketSize, lshCutObserveName(stage))
     }
 
-  private def candidatePairsFromBands(banded0: DataFrame,
-                                      numHashes: Int,
-                                      maxBucketSize: Int = Int.MaxValue,
-                                      bands: Int = 8): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    // the local first-band rule needs every agreeing band's collision row
-    // (uncapped) AND the banding's own band-hash arrays on the rows; a
-    // legacy persisted index without `bha` takes the dropDuplicates tail,
-    // which is banding-agnostic — so a wrong `bands` argument can no
-    // longer silently drop pairs (ADVICE r21 #1)
-    val localFirstBand =
-      maxBucketSize == Int.MaxValue && banded0.columns.contains("bha")
-    // the capped/legacy tail never reads `bha` — don't ship it through
-    // the cap window's Exchange
-    val banded = capBandBuckets(
-      if (localFirstBand) banded0 else dropIfPresent(banded0, "bha"),
-      maxBucketSize, "minHashLshCandidates")
-    // shuffle_hash, not the planner's default broadcast: both sides of
-    // the self-join then want the SAME Exchange(hashpartitioning(band,
-    // bh)) and AQE reuses it, so the signature chain (tokenize → ids →
-    // minhash) computes ONCE for the pair stage instead of once per
-    // side — broadcast materializes the build side as a SECOND full
-    // compute of the chain, and at 100 TB the banded table outgrows any
-    // broadcast threshold anyway. No sort: SHJ hashes the narrow
-    // (band, bh) key; signatures ride the exchange exactly once (the
-    // BandIndex row format).
-    val a = banded.hint("shuffle_hash").as("a")
-    val b = banded.hint("shuffle_hash").as("b")
-    val joined = a.join(b,
-      col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-        col("a.id") < col("b.id"))
-    // A pair colliding in k bands exits the join k times as IDENTICAL
-    // rows. UNCAPPED, every agreeing band's collision row exists, so each
-    // row can decide locally whether ITS band is the pair's first
-    // agreeing band and only that one survive — the same one-row-per-pair
-    // result as the old dropDuplicates, minus its Exchange + two
-    // HashAggregates over every collision row (the measured majority of
-    // ql6 after the scan; guide §2.4 "remove shuffles outright"). The
-    // comparison is O(bands) over the CARRIED band-hash arrays
-    // ([[graft.functions.FirstEqualSlot]]) — round 21 re-hashed both full
-    // signatures per collision row (up to 2×numHashes XXH64 calls), the
-    // measured ql53 regression. CAPPED, a cut bucket may have dropped the
-    // first-agreeing band's row, so the local rule could discard a pair
-    // the join still found — keep the dedup there (equivalence
-    // spec-pinned uncapped in `MinHashSpec`).
-    if (localFirstBand)
-      joined
-        .filter(col("a.band") ===
+  /** The one LSH band-pair join behind every MinHash/SimHash candidate
+    * path. `banded` (and `against`, when given) are `(id, bha, band, bh)`
+    * frames — plus `mh` when `numHashes` asks for `est_jaccard` scoring.
+    *
+    *  - `against = None`: the banded self-join, pairs `a.id < b.id`.
+    *    Both sides carry the `shuffle_hash` hint, not the planner's
+    *    default broadcast: they then want the SAME
+    *    Exchange(hashpartitioning(band, bh)) and AQE reuses it, so the
+    *    signature chain (tokenize → ids → minhash) computes ONCE for the
+    *    pair stage instead of once per side — broadcast materializes the
+    *    build side as a SECOND full compute of the chain, and at 100 TB
+    *    the banded table outgrows any broadcast threshold anyway. No
+    *    sort: SHJ hashes the narrow (band, bh) key.
+    *  - `against = Some(index)`: cross pairs between `banded` and the
+    *    index (least/greatest = the self-join's a.id < b.id orientation,
+    *    reachable from either side), plus `banded`'s internal pairs when
+    *    `withinNew`. No hint, so a bucketed index side reads
+    *    Exchange-free (`BucketingSpec`).
+    *
+    * A pair colliding in k bands exits the join k times as IDENTICAL
+    * rows. UNCAPPED, every agreeing band's collision row exists, so each
+    * row decides locally whether ITS band is the pair's first agreeing
+    * band ([[graft.functions.FirstEqualSlot]], O(bands) over the carried
+    * band-hash arrays) and only that one survives — one row per pair
+    * with no dedup Exchange + two HashAggregates over every collision
+    * row; cross (one old id) and intra (both new) pairs are disjoint, so
+    * their union needs no dedup either. CAPPED, a cut bucket may have
+    * dropped the first-agreeing band's row, so the local rule could
+    * discard a pair the join still found: `bha` is dropped before the
+    * cap window's Exchange and ONE `dropDuplicates` runs over the whole
+    * result (equivalence spec-pinned uncapped in `MinHashSpec`). The cap
+    * applies to each side independently (a saturated INDEX bucket
+    * otherwise pairs every batch arrival against its whole membership).
+    */
+  private def bandPairs(banded: DataFrame, numHashes: Option[Int],
+                        maxBucketSize: Int, stage: String,
+                        against: Option[DataFrame] = None,
+                        withinNew: Boolean = true): DataFrame = {
+    val uncapped = maxBucketSize == Int.MaxValue
+    def side(df: DataFrame): DataFrame = {
+      require(df.schema.fieldNames.contains("bha"),
+        s"$stage: banded frame lacks the `bha` band-hash array (an index " +
+          "saved before `bha` joined the BandIndex row format); migrate it " +
+          "with index.withColumn(\"bha\", " +
+          "graft.functions.MinHash.bandHashes(col(\"mh\"), bands))")
+      capBandBuckets(if (uncapped) df else df.drop("bha"), maxBucketSize, stage)
+    }
+    def join(l: DataFrame, r: DataFrame, cross: Boolean): DataFrame = {
+      val (a, b) = (l.as("a"), r.as("b"))
+      val joined = a.join(b, col("a.band") === col("b.band") &&
+        col("a.bh") === col("b.bh") &&
+        (if (cross) col("a.id") =!= col("b.id") else col("a.id") < col("b.id")))
+      val local =
+        if (uncapped) joined.filter(col("a.band") ===
           graft.functions.MinHash.firstEqualSlot(col("a.bha"), col("b.bha")))
-        .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
-          minHashSimilarity(col("a.mh"), col("b.mh"), numHashes).as("est_jaccard"))
-    else
-      joined
-        .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
-          minHashSimilarity(col("a.mh"), col("b.mh"), numHashes).as("est_jaccard"))
-        .dropDuplicates("doc_a", "doc_b")
+        else joined
+      val ids =
+        if (cross) Seq(least(col("a.id"), col("b.id")).as("doc_a"),
+          greatest(col("a.id"), col("b.id")).as("doc_b"))
+        else Seq(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
+      local.select(ids ++ numHashes.map(n =>
+        minHashSimilarity(col("a.mh"), col("b.mh"), n).as("est_jaccard")): _*)
+    }
+    val nb = side(banded)
+    val pairs = against match {
+      case None =>
+        val h = nb.hint("shuffle_hash")
+        join(h, h, cross = false)
+      case Some(index) =>
+        val cross = join(nb, side(index), cross = true)
+        if (withinNew) cross.union(join(nb, nb, cross = false)) else cross
+    }
+    if (uncapped) pairs else pairs.dropDuplicates("doc_a", "doc_b")
   }
-
-  /** `drop` that tolerates the column's absence (legacy banded frames). */
-  private def dropIfPresent(df: DataFrame, c: String): DataFrame =
-    if (df.columns.contains(c)) df.drop(c) else df
 
   /** Persistable LSH band index — the INCREMENTAL entry to the near-dup
     * pipeline. A 100 TB corpus is not re-signed on every ingest: build the
@@ -331,17 +313,31 @@ object Dedup {
     * batch-side Exchange (`BucketingSpec`).
     */
   object BandIndex {
-    /** `(id, mh, band, bh)` rows for a corpus (same parameters MUST be
-      * used for every increment — signatures from different
-      * numHashes/bands never collide correctly).
+    /** `(id, mh, bha, band, bh)` rows for a corpus — one row per
+      * (doc, band): `mh` the MinHash signature, `bha` its band-hash ARRAY
+      * (fused [[graft.functions.BandHashes]] — one loop per doc),
+      * `(band, bh)` = posexplode(bha), the join key of every LSH
+      * candidate path. Carrying `bha` (bands × 8 bytes next to the
+      * ~numHashes × 8-byte signature) is what lets the uncapped pair tail
+      * keep one collision row per pair with an O(bands) array comparison
+      * instead of re-hashing both signatures per collision row. The same
+      * parameters MUST be used for every increment — signatures from
+      * different numHashes/bands never collide correctly.
       */
     def build(df: DataFrame, idCol: String, textCol: String,
               numHashes: Int = 64, bands: Int = 8,
               hashedTokenIds: Boolean = false): DataFrame = {
       require(numHashes % bands == 0, "bands must divide numHashes")
-      // hashedTokenIds must match the batch runs this index will be
-      // unioned with — signatures on different token bases never agree
-      bandedSignatures(df, idCol, textCol, numHashes, bands, hashedTokenIds)
+      // hashedTokenIds: minhash md5-derived 8-byte ids instead of the raw
+      // strings — identical banding/scoring semantics on an
+      // oracle-expressible hash basis (see [[tokenIds64]]); it must match
+      // the batch runs this index will be unioned with — signatures on
+      // different token bases never agree
+      val toks =
+        if (hashedTokenIds) tokenIds64(tokens(col(textCol)))
+        else tokens(col(textCol))
+      bandedFromTokens(df.select(col(idCol).as("id"), toks.as("toks")),
+        numHashes, bands)
     }
     def save(index: DataFrame, path: String): Unit =
       index.write.mode("overwrite").parquet(path)
@@ -398,15 +394,13 @@ object Dedup {
                                   minJaccard: Double = 0.0,
                                   withinNew: Boolean = true,
                                   hashedTokenIds: Boolean = false,
-                                  maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
+                                  maxBucketSize: Int = Int.MaxValue): DataFrame =
     // hashedTokenIds: MUST match the index's build setting (and the batch
     // runs the union contract compares against) — mixed bases silently
     // produce disjoint signatures and zero cross candidates
-    val nb = bandedSignatures(newDocs, idCol, textCol, numHashes, bands, hashedTokenIds)
-    minHashLshCandidatesAgainstIndex(nb, index, numHashes, minJaccard, withinNew,
-      maxBucketSize)
-  }
+    minHashLshCandidatesAgainstIndex(
+      BandIndex.build(newDocs, idCol, textCol, numHashes, bands, hashedTokenIds),
+      index, numHashes, minJaccard, withinNew, maxBucketSize)
 
   /** The index-vs-index core of [[minHashLshCandidatesAgainst]]: cross
     * pairs between a NEW banded table and an existing one, plus
@@ -415,63 +409,18 @@ object Dedup {
     * [[graft.llm.Pipelines.appendCrawlBatch]]) enter here so the batch
     * is signed and banded exactly ONCE — re-deriving signatures from
     * text per consumer is the avoidable corpus-scale compute this split
-    * exists to prevent.
+    * exists to prevent. The exact union contract vs a from-scratch batch
+    * run holds at the default (uncapped) setting ONLY: capped, the index
+    * keeps its first-cap ids per bucket while a union run would rank old
+    * and new ids together.
     */
   def minHashLshCandidatesAgainstIndex(newIndex: DataFrame, index: DataFrame,
                                        numHashes: Int = 64,
                                        minJaccard: Double = 0.0,
                                        withinNew: Boolean = true,
-                                       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    // the cap applies to EACH side independently (a saturated INDEX
-    // bucket — a crawl state full of silence-class text — otherwise
-    // pairs every batch arrival against its whole membership: m_index ×
-    // m_batch cross pairs per bucket). The exact union contract vs a
-    // from-scratch batch run holds at the default (uncapped) setting
-    // ONLY: capped, the index keeps its first-cap ids per bucket while
-    // a union run would rank old and new ids together.
-    // the local first-band rule (candidatePairsFromBands) applies here
-    // too when uncapped and BOTH frames carry their band-hash arrays: a
-    // cross/intra pair's collision rows exist for every agreeing band,
-    // so `a.band === first_equal_slot(a.bha, b.bha)` keeps exactly one —
-    // and cross (one old id) and intra (both new) are disjoint pair
-    // sets, so with both deduped locally the union needs NO
-    // dropDuplicates Exchange at all. A legacy index without `bha`
-    // keeps the dedup tail (banding-agnostic — ADVICE r21 #1).
-    val localFirstBand = maxBucketSize == Int.MaxValue &&
-      newIndex.columns.contains("bha") && index.columns.contains("bha")
-    val nb = capBandBuckets(
-      if (localFirstBand) newIndex else dropIfPresent(newIndex, "bha"),
-      maxBucketSize, "minHashLshCandidatesAgainst")
-    val a = nb.as("a")
-    val b = capBandBuckets(
-      if (localFirstBand) index else dropIfPresent(index, "bha"),
-      maxBucketSize, "minHashLshCandidatesAgainst").as("b")
-    // least/greatest = the batch form's a.id < b.id orientation, reachable
-    // from either side of the cross join
-    val crossJoined = a.join(b, col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-        col("a.id") =!= col("b.id"))
-    val cross = (if (localFirstBand)
-        crossJoined.filter(col("a.band") ===
-          graft.functions.MinHash.firstEqualSlot(col("a.bha"), col("b.bha")))
-      else crossJoined)
-      .select(least(col("a.id"), col("b.id")).as("doc_a"),
-        greatest(col("a.id"), col("b.id")).as("doc_b"),
-        minHashSimilarity(col("a.mh"), col("b.mh"), numHashes).as("est_jaccard"))
-    val x = nb.as("x")
-    val y = nb.as("y")
-    val intraJoined = x.join(y, col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-        col("x.id") < col("y.id"))
-    val intra = (if (localFirstBand)
-        intraJoined.filter(col("x.band") ===
-          graft.functions.MinHash.firstEqualSlot(col("x.bha"), col("y.bha")))
-      else intraJoined)
-      .select(col("x.id").as("doc_a"), col("y.id").as("doc_b"),
-        minHashSimilarity(col("x.mh"), col("y.mh"), numHashes).as("est_jaccard"))
-    val unioned = if (withinNew) cross.union(intra) else cross
-    val scored =
-      if (localFirstBand) unioned else unioned.dropDuplicates("doc_a", "doc_b")
-    if (minJaccard > 0) scored.filter(col("est_jaccard") >= minJaccard) else scored
-  }
+                                       maxBucketSize: Int = Int.MaxValue): DataFrame =
+    aboveJaccard(bandPairs(newIndex, Some(numHashes), maxBucketSize,
+      "minHashLshCandidatesAgainst", Some(index), withinNew), minJaccard)
 
   /** SimHash (64-bit, Charikar): per token hash, each bit votes ±1; the
     * sign vector packs into a bit array. Near-dup candidates collide on a
@@ -536,37 +485,12 @@ object Dedup {
       .withColumn("bits", simHashBits(col("toks")))
     // fused banding over the bit vector (one loop — the hashInt chain of
     // xxhash64 over ARRAY<INT> slices, bit-equality spec-pinned) + the
-    // carried band-hash array for the uncapped local pair dedup below
-    // (the candidatePairsFromBands design, round 22)
-    val uncapped = maxBucketSize == Int.MaxValue
-    val withBha = withBits
+    // carried band-hash array for the uncapped local pair dedup
+    val banded = withBits
       .withColumn("bha", graft.functions.MinHash.bandHashes(col("bits"), b0))
-    val exploded = withBha
-      .select(col("id") +: (if (uncapped) Seq(col("bha")) else Nil) :+
-        posexplode(col("bha")): _*)
+      .select(col("id"), col("bha"), posexplode(col("bha")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-    val banded = capBandBuckets(exploded, maxBucketSize, "simHashCandidates")
-    // shuffle_hash → one reused Exchange for both sides: the simhash
-    // bit-vote chain computes once, not once per side (see
-    // candidatePairsFromBands)
-    val a = banded.hint("shuffle_hash").as("a")
-    val b = banded.hint("shuffle_hash").as("b")
-    val joined = a.join(b,
-      col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-        col("a.id") < col("b.id"))
-    // uncapped: one collision row per pair survives LOCALLY (first
-    // agreeing band — every agreeing band's row exists), removing the
-    // dropDuplicates Exchange + HashAggregates over the collision rows;
-    // capped buckets keep the dedup (candidatePairsFromBands argument)
-    if (uncapped)
-      joined
-        .filter(col("a.band") ===
-          graft.functions.MinHash.firstEqualSlot(col("a.bha"), col("b.bha")))
-        .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-    else
-      joined
-        .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-        .dropDuplicates("doc_a", "doc_b")
+    bandPairs(banded, None, maxBucketSize, "simHashCandidates")
   }
 
   /** SimHash `bands` sized for the corpus (the [[Similarity.autoPlanes]]
@@ -634,12 +558,11 @@ object Dedup {
                         n: Int = 3, threshold: Double = 0.8,
                         numHashes: Int = 64, bands: Int = 8,
                         maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
     val shingleIds = tokenIds64(wordNgrams(col(textCol), n))
     val shingled = df.select(col(idCol).as("id"), shingleIds.as("sh"))
-    val banded = bandedFromTokens(
-      shingled.select(col("id"), col("sh").as("toks")), numHashes, bands)
-    val cands = candidatePairsFromBands(banded, numHashes, maxBucketSize, bands)
+    val cands = minHashLshCandidatesFromIndex(bandedFromTokens(
+        shingled.select(col("id"), col("sh").as("toks")), numHashes, bands),
+      numHashes, maxBucketSize = maxBucketSize, bands = bands)
     // Both rescore join-backs consume the SAME unrenamed (id, sh)
     // projection keyed on id, so their Exchanges canonicalize
     // identically and AQE plans the second as a ReusedExchange — the
@@ -1049,7 +972,7 @@ object Dedup {
     val sizes = fp.groupBy(col("_id")).agg(count(lit(1)).as("_sz"))
     // shuffle_hash → the fingerprint explode computes once for both
     // sides of the intersection self-join (reused Exchange; see
-    // candidatePairsFromBands). The `sizes` aggregate still scans
+    // bandPairs). The `sizes` aggregate still scans
     // separately — its shuffle key (_id) differs from the join's (_fp).
     val inter = fp.hint("shuffle_hash").as("a").join(fp.hint("shuffle_hash").as("b"),
         col("a._fp") === col("b._fp") && col("a._id") < col("b._id"))

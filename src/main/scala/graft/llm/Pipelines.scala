@@ -321,10 +321,17 @@ object Pipelines {
       // has no `index_table` entry — re-register from the _bucketspec
       // sidecar so the nightly load → append → save loop works across
       // app restarts, not just same-session (ADVICE r15)
-      val index = Option(meta.getAs[String]("index_table")) match {
+      val saved = Option(meta.getAs[String]("index_table")) match {
         case Some(tbl) => Dedup.BandIndex.loadBucketed(spark, tbl, s"$path/index")
         case None      => spark.read.parquet(s"$path/index")
       }
+      // indexes saved before `bha` joined the BandIndex row format are
+      // migrated on load: the band-hash array is a pure function of `mh`
+      val index =
+        if (saved.schema.fieldNames.contains("bha")) saved
+        else saved.select(col("id"), col("mh"),
+          graft.functions.MinHash.bandHashes(col("mh"), params.bands).as("bha"),
+          col("band"), col("bh"))
       CrawlState(params, spark.read.parquet(s"$path/staged"), index,
         spark.read.parquet(s"$path/pairs"),
         spark.read.parquet(s"$path/lang_model"),

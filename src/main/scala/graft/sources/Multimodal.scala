@@ -1696,7 +1696,7 @@ object Multimodal {
       "perceptualNearDupPairs")
     // shuffle_hash → both sides share one reused Exchange, so the hash
     // projection (and, upstream, the decode) computes ONCE for the pair
-    // stage (the Dedup.candidatePairsFromBands argument — for media the
+    // stage (the Dedup.bandPairs argument — for media the
     // avoided recompute is the decode itself)
     val a = capped.hint("shuffle_hash").as("a")
     val b = capped.hint("shuffle_hash").as("b")

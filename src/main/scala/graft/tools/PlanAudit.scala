@@ -38,8 +38,7 @@ object PlanAudit {
       "band_hashes array projection (r22 -- one loop per doc, replacing bands " +
       "interpreted xxhash64-over-slice lambdas); pair dedup is the LOCAL " +
       "first_equal_slot filter over the CARRIED band-hash arrays (r22 -- O(bands) " +
-      "compares per collision row, replacing r21's minhash_first_band re-hash of both " +
-      "full signatures) -- the old (doc_a, doc_b) dropDuplicates Exchange + two " +
+      "compares per collision row) -- the old (doc_a, doc_b) dropDuplicates Exchange + two " +
       "HashAggregates over every collision row remain GONE from the uncapped plan " +
       "(runtime-pinned in LlmSpec; the capped path keeps the narrow dedup Exchange)"),
     "ql19_decontaminate" -> "benchmark grams broadcast -- corpus side joins with no Exchange before the join",

@@ -133,36 +133,6 @@ class MinHashSpec extends SparkSpec {
     assert(both.count() == 200)
   }
 
-  test("minhash_first_band replays the banding's xxhash64-over-slice chain exactly") {
-    // the ONLY acceptable semantics: firstBand(a, b) == the minimum band
-    // index where xxhash64(slice(a)) == xxhash64(slice(b)) — the band
-    // join's own collision condition (the pair-dedup replacement's
-    // correctness argument)
-    val bands = 8
-    val r = 8
-    val docs = graft.sources.Tables.load(spark, sf, "documents").limit(300)
-      .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-      .select(col("doc_id").as("id"), Dedup.minHash(col("toks"), 64).as("mh"))
-    val a = docs.as("a")
-    val b = docs.as("b")
-    val ref = (0 until bands).map { i =>
-      when(xxhash64(slice(col("a.mh"), i * r + 1, r)) ===
-        xxhash64(slice(col("b.mh"), i * r + 1, r)), lit(i)).otherwise(lit(bands))
-    }.reduce(least(_, _))
-    val refFirst = when(ref === bands, lit(-1)).otherwise(ref)
-    val pairs = a.crossJoin(b).filter(col("a.id") < col("b.id"))
-      .select(
-        MinHash.firstBand(col("a.mh"), col("b.mh"), bands).as("native"),
-        refFirst.as("ref"))
-    assert(pairs.filter(not(col("native") <=> col("ref"))).count() == 0)
-    // identical signatures agree on band 0; the fixture has few organic
-    // collisions, so also plant one guaranteed hit
-    val self = docs.select(
-      MinHash.firstBand(col("mh"), col("mh"), bands).as("fb"))
-    assert(self.filter(col("fb") =!= 0).count() == 0)
-  }
-
   test("band_hashes is bit-exact vs the xxhash64-over-slice HOF (long and int bases)") {
     // the fused banding projection must replay the band join's exact
     // collision keys: xxhash64(slice(sig, b*r+1, r)) per band, fold from
@@ -192,8 +162,13 @@ class MinHashSpec extends SparkSpec {
     }
   }
 
-  test("first_equal_slot over carried band hashes equals minhash_first_band") {
+  test("first_equal_slot over carried band hashes equals the HOF first band") {
+    // the ONLY acceptable semantics: first_equal_slot(a.bha, b.bha) == the
+    // minimum band index where xxhash64(slice(a.mh)) == xxhash64(slice(b.mh))
+    // — the band join's own collision condition (the local pair-dedup
+    // rule's correctness argument), or -1 when no band agrees
     val bands = 8
+    val r = 8
     val docs = graft.sources.Tables.load(spark, sf, "documents").limit(300)
       .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
@@ -201,12 +176,18 @@ class MinHashSpec extends SparkSpec {
       .withColumn("bha", MinHash.bandHashes(col("mh"), bands))
     val a = docs.as("a")
     val b = docs.as("b")
+    val ref = (0 until bands).map { i =>
+      when(xxhash64(slice(col("a.mh"), i * r + 1, r)) ===
+        xxhash64(slice(col("b.mh"), i * r + 1, r)), lit(i)).otherwise(lit(bands))
+    }.reduce(least(_, _))
+    val refFirst = when(ref === bands, lit(-1)).otherwise(ref)
     val pairs = a.crossJoin(b).filter(col("a.id") < col("b.id"))
       .select(
         MinHash.firstEqualSlot(col("a.bha"), col("b.bha")).as("fes"),
-        MinHash.firstBand(col("a.mh"), col("b.mh"), bands).as("fb"))
-    assert(pairs.filter(not(col("fes") <=> col("fb"))).count() == 0)
-    // identical arrays agree at slot 0
+        refFirst.as("ref"))
+    assert(pairs.filter(not(col("fes") <=> col("ref"))).count() == 0)
+    // identical arrays agree at slot 0; the fixture has few organic
+    // collisions, so this plants one guaranteed hit per doc
     val self = docs.select(MinHash.firstEqualSlot(col("bha"), col("bha")).as("s"))
     assert(self.filter(col("s") =!= 0).count() == 0)
   }
@@ -226,10 +207,30 @@ class MinHashSpec extends SparkSpec {
         .select(MinHash.bandHashes(col("mh"), 2)).collect()
     }
     assert(ex2.getMessage != null)
+    // a NULL band-hash array raises too, on both the codegen and the
+    // interpreted path — a NULL slot index would make `a.band === …` drop
+    // the pair silently
+    val withNull = spark.range(2).select(array(col("id")).as("x"),
+      when(col("id") > 5, array(col("id"))).as("y"))
+    for ((wholeStage, factory) <- Seq("true" -> "CODEGEN_ONLY", "false" -> "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      try {
+        val ex3 = intercept[Exception] {
+          withNull.select(MinHash.firstEqualSlot(col("x"), col("y"))).collect()
+        }
+        assert(Iterator.iterate[Throwable](ex3)(_.getCause).takeWhile(_ != null)
+          .exists(e => String.valueOf(e.getMessage).contains("NULL band-hash array")),
+          s"$factory: $ex3")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
   }
 
   test("first-band filtered candidates equal the dropDuplicates form (uncapped)") {
-    // the candidatePairsFromBands rewrite's end-to-end pin: one row per
+    // the local first-band rule's end-to-end pin: one row per
     // (doc_a, doc_b) with the identical est_jaccard, exactly the old
     // dedup's result set
     val docs = graft.sources.Tables.load(spark, sf, "documents").limit(400)

@@ -2,6 +2,7 @@ package graft.llm
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** [[Pipelines.pretrainCorpus]] — the end-to-end composition: every gate
   * individually proven elsewhere; here the pipeline must route the right
@@ -353,6 +354,40 @@ class PipelinesSpec extends SparkSpec {
     val loaded = Pipelines.CrawlState.load(spark, dir)
     assert(loaded.params.maxBucketSize == Int.MaxValue,
       "a legacy state must load with the exact (uncapped) semantics it was built with")
+  }
+
+  test("CrawlState.load migrates an index saved without `bha`; the pair join refuses one") {
+    import spark.implicits._
+    val docsA = (70 to 75).map(i => (i.toLong, goodDoc(i), "en"))
+      .toDF("doc_id", "text", "lang")
+    val docsB = (Seq((80L, goodDoc(70).replace("w70x0y1", "altered"), "en")) ++
+      (81 to 82).map(i => (i.toLong, goodDoc(i), "en"))).toDF("doc_id", "text", "lang")
+    val dir = java.nio.file.Files.createTempDirectory("crawl_legacy_index").toString
+    val params = Pipelines.CrawlParams(numHashes = 32, bands = 4)
+    Pipelines.initCrawlState(docsA, params).save(dir)
+    // rewrite the index WITHOUT the band-hash array — the on-disk shape
+    // of an index saved before `bha` joined the BandIndex row format
+    val legacy = spark.read.parquet(s"$dir/index").drop("bha")
+    spark.createDataFrame(legacy.collect().toSeq.asJava, legacy.schema)
+      .write.mode("overwrite").parquet(s"$dir/index")
+    val legacyIndex = spark.read.parquet(s"$dir/index")
+    assert(!legacyIndex.columns.contains("bha"))
+    val viaLegacy = Pipelines.appendCrawlBatch(Pipelines.CrawlState.load(spark, dir), docsB)
+    val inMem = Pipelines.appendCrawlBatch(Pipelines.initCrawlState(docsA, params), docsB)
+      .checkpoint()
+    assert(rowsOf(viaLegacy.index) == rowsOf(inMem.index))
+    assert(rowsOf(viaLegacy.pairs) == rowsOf(inMem.pairs))
+    assert(rowsOf(viaLegacy.pairs).nonEmpty, "the altered copy must pair with its source")
+    assert(rowsOf(Pipelines.emitPretrainCorpus(viaLegacy)) ==
+      rowsOf(Pipelines.emitPretrainCorpus(inMem)))
+    viaLegacy.release()
+    // outside CrawlState.load nothing migrates: the shared band-pair join
+    // refuses a `bha`-less frame and names the one-line migration
+    val ex = intercept[IllegalArgumentException] {
+      Dedup.minHashLshCandidatesFromIndex(legacyIndex, numHashes = 32, bands = 4)
+    }
+    assert(ex.getMessage.contains("bandHashes"), ex.getMessage)
+    spark.sqlContext.clearCache()
   }
 
   test("checkpoint() bounds gateCaches across a 12-append session (no unbounded growth)") {
